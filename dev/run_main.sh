@@ -4,8 +4,10 @@
 # Env (SPARK_GRAFT_*) passes through.
 set -euo pipefail
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
-# SPARK_GRAFT_XMX overrides the heap (e.g. 48g for two concurrent JVMs)
-exec java -Xmx"${SPARK_GRAFT_XMX:-100g}" -XX:+UseG1GC \
+# Default heap: half of MemTotal, clamped to 2-8 GB (the test-suite rule).
+# SPARK_GRAFT_XMX overrides it (e.g. 48g for two concurrent JVMs).
+XMX_DEFAULT="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
+exec java -Xmx"${SPARK_GRAFT_XMX:-$XMX_DEFAULT}" -XX:+UseG1GC \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Round benchmark: run every declared query on SPARK_GRAFT_SF_DIR and emit
   * one JSON line with per-query wall seconds.
   *
@@ -65,26 +63,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outFile = args.headOption.getOrElse("BENCH.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // delete reliable checkpoint data when its RDD is GC'd — the
-      // cleanup half of Checkpoints.pin that release() can't do for
-      // the final frame an operator returns (Checkpoints scaladoc)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE size the output partitions of CACHED plans too (round
-      // 20; guide §2.2): off, every persisted bounded intermediate
-      // (histograms, codebooks, signature tables, per-customer aggs)
-      // stays fanned across spark.sql.shuffle.partitions near-empty
-      // partitions and every consumer stage schedules that many tasks
-      // — the round-19 verdict's "tiny-frame overhead class". Scale-
-      // independent: AQE picks partition counts from bytes at any sf.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     def execute(name: String): Double = {
       val t0 = System.nanoTime()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plan evidence the optimization rounds commit under `plans/` (the
   * judge checks plan claims against these files, guide §7.2). One file
@@ -22,23 +20,7 @@ object Plans {
       args(3).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE size the output partitions of CACHED plans too (round
-      // 20; guide §2.2): off, every persisted bounded intermediate
-      // (histograms, codebooks, signature tables, per-customer aggs)
-      // stays fanned across spark.sql.shuffle.partitions near-empty
-      // partitions and every consumer stage schedules that many tasks
-      // — the round-19 verdict's "tiny-frame overhead class". Scale-
-      // independent: AQE picks partition counts from bytes at any sf.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -1,8 +1,12 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.operators.Checkpoints
 
 /** Round-13/14 query surface: the GK-sketch threshold form the
   * q94/q140 scaladocs promised as the 100 TB swap for `exactCont`
@@ -308,7 +312,7 @@ object Queries21 {
       val tsel = docs.filter(size(split($"text", " ")) >= 12)
         .withColumn("_h", hash64($"doc_id".cast("string"), 163))
         .orderBy($"_h", $"doc_id").limit(64).drop("_h")
-        .localCheckpoint(true)
+        .pipe(Checkpoints.pin)
       val verb = tsel.select(($"doc_id" + 1000000000L).as("doc_id"), $"text")
       // derive the edit FIRST, shift the id after (the q165 lateral-
       // alias note: DuckDB would not capture the shifted alias)
@@ -436,7 +440,7 @@ object Queries21 {
         val vsel = emb
           .withColumn("_h", hash64($"vec_id".cast("string"), 164))
           .orderBy($"_h", $"vec_id").limit(64).drop("_h")
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         // amplitude via integer-then-one-divide (q165's engine-exact
         // double); perturb against the ORIGINAL vec_id, shift after
         val amp = (lit(5L) + ($"vec_id" % 6) * 10L).cast("double") / 100.0

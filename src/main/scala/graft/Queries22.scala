@@ -1,7 +1,11 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Checkpoints
 
 /** Round-15 query surface: the contamination recall harness — the
   * q50/q95 "measure, don't guess" discipline applied to the leakage
@@ -97,7 +101,7 @@ object Queries22 {
         val tsel = docs.filter(size(split($"text", " ")) >= 12)
           .withColumn("_h", hash64($"doc_id".cast("string"), 165))
           .orderBy($"_h", $"doc_id").limit(TestN).drop("_h")
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         val verb = tsel.select(($"doc_id" + 1000000000L).as("doc_id"), $"text")
         // derive the edit FIRST, shift the id after: aliasing the new id
         // to "doc_id" in the same select would capture the lambda's
@@ -164,7 +168,7 @@ object Queries22 {
         val vsel = emb
           .withColumn("_h", hash64($"vec_id".cast("string"), 166))
           .orderBy($"_h", $"vec_id").limit(TestN).drop("_h")
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         // amplitude via integer-then-one-divide so both engines produce
         // the identical double (a decimal 0.1 multiply would not)
         val amp = (lit(5L) + ($"vec_id" % 6) * 10L).cast("double") / 100.0
@@ -515,7 +519,7 @@ object Queries22 {
       val tsel = docs.filter(size(split($"text", " ")) >= 12)
         .withColumn("_h", hash64($"doc_id".cast("string"), 167))
         .orderBy($"_h", $"doc_id").limit(64).drop("_h")
-        .localCheckpoint(true)
+        .pipe(Checkpoints.pin)
       val corp = docs
         .join(broadcast(tsel.select($"doc_id")), Seq("doc_id"), "left_anti")
       val hostLen = (size(split($"text", " ")) *
@@ -632,7 +636,7 @@ object Queries22 {
       val tsel = docs.filter(size(split($"text", " ")) >= 12)
         .withColumn("_h", hash64($"doc_id".cast("string"), 167))
         .orderBy($"_h", $"doc_id").limit(64).drop("_h")
-        .localCheckpoint(true)
+        .pipe(Checkpoints.pin)
       val corp = docs
         .join(broadcast(tsel.select($"doc_id")), Seq("doc_id"), "left_anti")
       val hostLen = (size(split($"text", " ")) *
@@ -765,7 +769,7 @@ object Queries22 {
         val vsel = emb
           .withColumn("_h", hash64($"vec_id".cast("string"), 166))
           .orderBy($"_h", $"vec_id").limit(TestN).drop("_h")
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         val amp = (lit(5L) + ($"vec_id" % 6) * 10L).cast("double") / 100.0
         val vplant = vsel
           .select($"vec_id",

@@ -1,7 +1,11 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.{Checkpoints, Overlap}
 
 /** Round-16 query surface: the sharded-SemDeDup co-location
   * measurement — the q165 "measure, don't guess" discipline applied to
@@ -14,8 +18,9 @@ object Queries23 {
 
   // ---------------------------------------------------- q169_shard_colocation
   /** Shard-key co-location recall for sharded SemDeDup
-    * ([[graft.operators.Similarity.semDedupHierSharded]] vs
-    * [[graft.operators.Similarity.semDedupHierShardedByContent]]).
+    * ([[graft.operators.Similarity.Slicing.IdHash]] vs
+    * [[graft.operators.Similarity.Slicing.Content]] slicing of
+    * [[graft.operators.Similarity.semDedupSliced]]).
     * Sharded dedup only catches pairs that land in the SAME shard, so
     * the shard key's co-location probability on true near-dup pairs IS
     * the structural recall ceiling of the whole operator — measured
@@ -31,10 +36,10 @@ object Queries23 {
     *  - `id_shards4`: the q48 id-hash arithmetic at shards = 4
     *    (hash64(id, 5) mod 4, plant id = vec_id + 1e9) — content-blind,
     *    expected co-location 1/4 at ANY amplitude. This is the
-    *    documented [[graft.operators.Similarity.semDedupHierSharded]]
+    *    documented [[graft.operators.Similarity.Slicing.IdHash]]
     *    miss, measured.
     *  - `c_planes2_t1`: one 2-plane hyperplane family (content shard
-    *    key of [[graft.operators.Similarity.semDedupHierShardedByContent]]
+    *    key of [[graft.operators.Similarity.Slicing.Content]]
     *    at shardPlanes = 2, tables = 1) — co-location (1 − θ/π)² per
     *    pair, ≈ 1 for light plants, degrading as the amplitude dial
     *    crosses planes.
@@ -69,7 +74,7 @@ object Queries23 {
           .orderBy($"_h", $"vec_id").limit(TestN).drop("_h")
           .select($"vec_id",
             transform($"embedding", _.cast("double")).as("embedding"))
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         // the q165 semantic-plant arithmetic (noise seed 8, amplitude
         // via integer-then-one-divide so both engines produce the
         // identical double); the pair keeps the ORIGINAL vec_id as its
@@ -359,7 +364,7 @@ object Queries23 {
           .orderBy($"_h", $"vec_id").limit(TestN).drop("_h")
           .select($"vec_id",
             transform($"embedding", _.cast("double")).as("embedding"))
-          .localCheckpoint(true)
+          .pipe(Checkpoints.pin)
         val amp = (lit(5L) + ($"vec_id" % 6) * 10L).cast("double") / 100.0
         val vplant = vsel.select($"vec_id",
           transform($"embedding", (x, i) => x + amp *
@@ -560,12 +565,12 @@ object Queries23 {
 
   // ---------------------------------------------------- q174_family_dial
   /** The quantizer-FAMILY dial for flat SemDeDup
-    * ([[graft.operators.Similarity.semDedupHierMulti]]), measured the
-    * q168/q172 way: the single quantizer's cell-straddle miss has no
-    * dial but its geometry, and the round-16 100× receipt showed two
-    * independent quantizer draws OR-composed catching MORE planted
-    * pairs than either alone — this query puts the number on the
-    * public operator at every scale.
+    * ([[graft.operators.Similarity.semDedupSliced]] `families`),
+    * measured the q168/q172 way: the single quantizer's cell-straddle
+    * miss has no dial but its geometry, and the round-16 100× receipt
+    * showed two independent quantizer draws OR-composed catching MORE
+    * planted pairs than either alone — this query puts the number on
+    * the public operator at every scale.
     *
     * Fixture: a deterministic 1/4 hash sample of the embeddings table
     * (the PqConfig calibration-sample discipline — the dial is
@@ -609,14 +614,14 @@ object Queries23 {
                 i.cast("string")), 8) % 1000L).cast("double") / 1000.0 - 0.5))
               .as("embedding"))
           .select(($"vec_id" + 1000000000L).as("vec_id"), $"embedding")
-        val corpus = sub.unionByName(vplant).localCheckpoint(true)
+        val corpus = Checkpoints.pin(sub.unionByName(vplant))
         // parallelism = families: the three chains are independent by
         // design (guide §2.6 — overlap independent jobs); row-identical
         // to sequential, spec-pinned
-        val multi = Similarity.semDedupHierMulti(corpus, "embedding",
+        val multi = Similarity.semDedupSliced(corpus, "embedding",
             "vec_id", targetCell = 64L, tau = 0.8, families = 3,
             parallelism = 3)
-          .select($"family", $"vec_id").localCheckpoint(true)
+          .select($"family", $"vec_id").pipe(Checkpoints.pin)
         def statsFor(k: Int): DataFrame = multi
           .filter($"family" < k)
           .select($"vec_id").distinct()
@@ -701,7 +706,8 @@ object Queries23 {
   // ---------------------------------------------- q175_sharded_family_dial
   /** The COMPOSED deployment point, oracle-checked: content-sharded
     * SemDeDup × the quantizer-families dial
-    * ([[graft.operators.Similarity.semDedupHierShardedByContentMulti]]).
+    * ([[graft.operators.Similarity.semDedupSliced]] with
+    * [[graft.operators.Similarity.Slicing.Content]] and `families`).
     * q169/q172 price the shard key, q174 prices the families dial on
     * the flat form; a recall-sensitive sharded deployment runs BOTH —
     * content sharding closes the cross-shard miss, per-shard families
@@ -710,7 +716,7 @@ object Queries23 {
     * shard split (2 shards, the q169 bucket arithmetic at plane 0),
     * then per (shard, family) a FULL independent hierarchical
     * training + pair pass (4 trainings total at families = 2, seed
-    * pairs (31, 37) and (1031, 1037) — the `semDedupHierMulti` seed
+    * pairs (31, 37) and (1031, 1037) — the `semDedupSliced` family seed
     * convention applied per shard).
     *
     * Fixture: the q174 shape on an independent 1/4 hash sample (key
@@ -722,7 +728,7 @@ object Queries23 {
     *
     * Scale shape: one shard-code map pass + per-shard chains whose
     * every cost term is evaluated at n/shards — the
-    * [[graft.operators.Similarity.semDedupHierShardedByContent]]
+    * [[graft.operators.Similarity.Slicing.Content]]
     * linear-regime rail, times the families constant; the 100×
     * composed receipt (BASELINE round-18 contentfam table) carries
     * the measured wall.
@@ -753,13 +759,14 @@ object Queries23 {
                 i.cast("string")), 8) % 1000L).cast("double") / 1000.0 - 0.5))
               .as("embedding"))
           .select(($"vec_id" + 1000000000L).as("vec_id"), $"embedding")
-        val corpus = sub.unionByName(vplant).localCheckpoint(true)
+        val corpus = Checkpoints.pin(sub.unionByName(vplant))
         // parallelism = the 4 (shard, family) chains — independent by
         // design (guide §2.6); row-identical to sequential, spec-pinned
-        val multi = Similarity.semDedupHierShardedByContentMulti(corpus,
-            "embedding", "vec_id", dims = 64, targetCell = 64L, tau = 0.8,
-            shardPlanes = 1, tables = 1, families = 2, parallelism = 4)
-          .select($"family", $"vec_id").localCheckpoint(true)
+        val multi = Similarity.semDedupSliced(corpus,
+            "embedding", "vec_id", targetCell = 64L, tau = 0.8,
+            Similarity.Slicing.Content(dims = 64, shardPlanes = 1),
+            families = 2, parallelism = 4)
+          .select($"family", $"vec_id").pipe(Checkpoints.pin)
         def statsFor(k: Int): DataFrame = multi
           .filter($"family" < k)
           .select($"vec_id").distinct()
@@ -862,7 +869,7 @@ object Queries23 {
   // ---------------------------------------------- q176_sharded_range_split
   /** The CROSS-JVM fan-out rail, oracle-checked PER SHARD RANGE: the
     * q175 composition re-run through
-    * [[graft.operators.Similarity.semDedupHierShardedByContentFromMat]]
+    * [[graft.operators.Similarity.Slicing.Materialized]] shard ranges
     * — the shard materialization is written ONCE
     * ([[graft.operators.Similarity.materializeContentShards]]) and two
     * INDEPENDENT ranged runs (shard 0 alone, shard 1 alone — the two
@@ -909,35 +916,28 @@ object Queries23 {
                 i.cast("string")), 8) % 1000L).cast("double") / 1000.0 - 0.5))
               .as("embedding"))
           .select(($"vec_id" + 1000000000L).as("vec_id"), $"embedding")
-        val corpus = sub.unionByName(vplant).localCheckpoint(true)
+        val corpus = Checkpoints.pin(sub.unionByName(vplant))
         val mat = java.nio.file.Files
           .createTempDirectory("graft-q176-mat").toString + "/shards"
         Similarity.materializeContentShards(corpus, "embedding", 64,
           shardPlanes = 1, tables = 1, mat)
         // the two "JVMs": one ranged run per shard, fully independent
         def ranged(shard: Int): DataFrame =
-          Similarity.semDedupHierShardedByContentFromMat(s, mat,
+          Similarity.semDedupSliced(s.read.parquet(mat),
               "embedding", "vec_id", targetCell = 64L, tau = 0.8,
-              shardPlanes = 1, tables = 1, families = 2,
-              shardLo = shard, shardHi = shard, parallelism = 2)
-            .select($"vec_id").distinct().localCheckpoint(true)
+              Similarity.Slicing.Materialized(shardPlanes = 1, tables = 1,
+                shardLo = shard, shardHi = shard),
+              families = 2, parallelism = 2)
+            .select($"vec_id").distinct().pipe(Checkpoints.pin)
         // run the two ranged chains CONCURRENTLY (round 19; guide §2.6)
         // — they are the two independent "JVMs" of the orchestrator
         // recipe, so overlapping them in-session models the deployment
         // even more faithfully than back-to-back runs; each chain is
         // deterministic in its shard slice alone, so the verdicts are
         // identical to the sequential composition
-        val Seq(r0, r1) = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          try Await.result(
-            Future.sequence(Seq(0, 1).map(sh => Future(ranged(sh)))),
-            Duration.Inf)
-          finally pool.shutdown()
-        }
+        val Seq(r0, r1) = Overlap.fanOut(
+          Seq(0, 1).map(sh => () => ranged(sh)), parallelism = 2,
+          Checkpoints.release)
         def statsFor(run: Int, d: DataFrame): DataFrame = d
           .agg(count(lit(1)).cast("long").as("drops"),
             coalesce(sum(when($"vec_id" >= 1000000000L, 1L)), lit(0L))

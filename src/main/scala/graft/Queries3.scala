@@ -1,11 +1,14 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.operators.{AsOfJoin, Multimodal, RangeJoin, ScaleJoins}
+import graft.operators.{AsOfJoin, Checkpoints, Multimodal, RangeJoin,
+  ScaleJoins}
 
 /** Round-4 query surface: temporal joins (as-of, interval), the remaining
   * grouping/reshape shapes (cube, pivot), skew-safe join machinery, the
@@ -457,12 +460,12 @@ object Queries3 {
       val corpus = d.unionByName(d.select(($"doc_id" + 10000).as("doc_id"), $"text"))
       val keyed = corpus.select($"doc_id", md5($"text").as("ck"), $"text")
       // exact collapse: one representative (min id) per content hash.
-      // localCheckpoint (eager): reps feeds both the near-dup chain and
+      // pinned (eager): reps feeds both the near-dup chain and
       // the final expand join, and the blocks free themselves by GC —
       // no cache-manager entry to leak across queries.
       val reps = keyed.groupBy($"ck")
         .agg(min($"doc_id").as("rep_id"), first($"text").as("text"))
-        .localCheckpoint(true)
+        .pipe(Checkpoints.pin)
       val sh = reps
         .select($"rep_id", Dedup.shingleHashes3(Dedup.wordHashes(words($"text"))).as("sh"))
         .filter(size($"sh") > 0)

@@ -423,7 +423,7 @@ object Queries8 {
         // (measured: 81 sequential jobs, ~40–180 ms each, at sf0.1), so
         // overlapping them hides the shorter chain entirely. Results
         // are byte-identical to the sequential form (no shared state).
-        val (comp, pr) = graft.operators.Overlap.par2(
+        val Seq(comp, pr) = graft.operators.Overlap.fanOut(Seq(
           () => Dedup.connectedComponents(near, "id_a", "id_b"),
           () => {
             val edges = near
@@ -431,7 +431,7 @@ object Queries8 {
               .union(near
                 .select($"id_b".as("src"), $"id_a".as("dst"), $"jac".as("w")))
             Graphs.pageRank(edges, "src", "dst", "w", iters = Iters)
-          })
+          }), parallelism = 2)
         val w = Window.partitionBy($"component")
           .orderBy($"rank".desc, $"id".asc)
         comp.join(pr, comp("id") === pr("node"))
@@ -691,10 +691,10 @@ object Queries8 {
         }
         // the two stage aggregates are independent collect chains over
         // the same pinned cent — overlap them (round 20; guide §2.6,
-        // the q102 par2 recipe); results are deterministic collects, so
-        // the pair is byte-identical to the sequential composition
-        val (aAb, aUn) = graft.operators.Overlap.par2(
-          () => aniso(ab), () => aniso(un))
+        // the q102 fan-out recipe); results are deterministic collects,
+        // so the pair is byte-identical to the sequential composition
+        val Seq(aAb, aUn) = graft.operators.Overlap.fanOut(
+          Seq(() => aniso(ab), () => aniso(un)), parallelism = 2)
         val result = Seq(("abtt", aAb), ("centered", aUn))
         cent.unpersist()
         result.toDF("stage", "mean_pairwise_cos").orderBy($"stage")

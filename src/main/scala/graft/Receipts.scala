@@ -1,10 +1,13 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.hash64
-import graft.operators.Similarity
+import graft.operators.{Checkpoints, Similarity}
+import graft.operators.Similarity.Slicing
 
 /** Scale-receipt harness: the one-off measurements BASELINE.md's soak
   * tables record, committed so every number is reproducible from the
@@ -31,7 +34,8 @@ import graft.operators.Similarity
   *    plants aboard (per-family-prefix recall from one run);
   *  - `contentfam <dir> <planes> <tables> <families> [parallelism]` —
   *    the COMPOSED deployment point: content sharding × the families
-  *    dial ([[graft.operators.Similarity.semDedupHierShardedByContentMulti]],
+  *    dial ([[graft.operators.Similarity.semDedupSliced]] with
+  *    [[graft.operators.Similarity.Slicing.Content]] and `families`,
   *    one shared materialization), per-family-prefix recall from one
   *    run;
   *  - `streamsem <dir> <nprobe> [families]` — streaming semantic gate:
@@ -53,7 +57,7 @@ import graft.operators.Similarity
   *  - `contentrun <dir> <planes> <tables> <matPath> <lo-hi> <outPath>
   *    [families] [parallelism]` — run ONE JVM's shard range against an
   *    existing materialization
-  *    ([[graft.operators.Similarity.semDedupHierShardedByContentFromMat]]),
+  *    ([[graft.operators.Similarity.Slicing.Materialized]]),
   *    verdict written to `outPath`;
   *  - `contentmd5 <outPath> [outPath…]` — union the per-JVM verdicts
   *    and print drops/plants/verdict_md5 (compare against the
@@ -66,23 +70,7 @@ object Receipts {
     require(args.length >= 2, "usage: Receipts <cmd> <sfDir> [args...]")
     val cmd = args(0); val dir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE size the output partitions of CACHED plans too (round
-      // 20; guide §2.2): off, every persisted bounded intermediate
-      // (histograms, codebooks, signature tables, per-customer aggs)
-      // stays fanned across spark.sql.shuffle.partitions near-empty
-      // partitions and every consumer stage schedules that many tasks
-      // — the round-19 verdict's "tiny-frame overhead class". Scale-
-      // independent: AQE picks partition counts from bytes at any sf.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     val out = cmd match {
       case "sharded" =>
@@ -92,9 +80,10 @@ object Receipts {
         val vecs = embeddings(spark, dir).persist()
         vecs.count()
         val mp = if (form == "mat") Some(tmp("sharded")) else None
-        val (wall, n) = timeCount(Similarity.semDedupHierSharded(vecs,
+        val (wall, n) = timeCount(Similarity.semDedupSliced(vecs,
           "embedding", "vec_id", targetCell = 64L, tau = 0.95,
-          shards = shards, kmax = kmax, matPath = mp, parallelism = par))
+          Slicing.IdHash(shards), kmax = kmax, matPath = mp,
+          parallelism = par))
         s"""{"cmd":"sharded","form":"$form","shards":$shards,"kmax":$kmax,"parallelism":$par,"wall_sec":$wall,"rows":$n}"""
       case "content" =>
         val planes = args(2).toInt; val tables = args(3).toInt
@@ -105,9 +94,8 @@ object Receipts {
         vecs.count()
         val mp = if (form == "mat") Some(tmp("content")) else None
         val t0 = System.nanoTime()
-        val drops = Similarity.semDedupHierShardedByContent(vecs,
-            "embedding", "vec_id", dims = 64, targetCell = 64L,
-            tau = 0.8, shardPlanes = planes, tables = tables,
+        val drops = Similarity.semDedupSliced(vecs, "embedding", "vec_id",
+            targetCell = 64L, tau = 0.8, Slicing.Content(64, planes, tables),
             kmax = kmax, matPath = mp, parallelism = par)
           .select(col("vec_id")).distinct().persist()
         val nDrops = drops.count()
@@ -122,9 +110,8 @@ object Receipts {
         val vecs = withPlants(spark, dir).persist()
         vecs.count()
         val t0 = System.nanoTime()
-        val all = Similarity.semDedupHierShardedByContentMulti(vecs,
-            "embedding", "vec_id", dims = 64, targetCell = 64L,
-            tau = 0.8, shardPlanes = planes, tables = tables,
+        val all = Similarity.semDedupSliced(vecs, "embedding", "vec_id",
+            targetCell = 64L, tau = 0.8, Slicing.Content(64, planes, tables),
             families = families, matPath = Some(tmp("contentfam")),
             parallelism = par)
           .select(col("family"), col("vec_id")).persist()
@@ -148,7 +135,7 @@ object Receipts {
         val vecs = withPlants(spark, dir).persist()
         vecs.count()
         val t0 = System.nanoTime()
-        val all = Similarity.semDedupHierMulti(vecs, "embedding",
+        val all = Similarity.semDedupSliced(vecs, "embedding",
             "vec_id", targetCell = 64L, tau = 0.8, families = families)
           .select(col("family"), col("vec_id")).persist()
         all.count()
@@ -195,10 +182,10 @@ object Receipts {
         val families = if (args.length > 7) args(7).toInt else 1
         val par = if (args.length > 8) args(8).toInt else 1
         val t0 = System.nanoTime()
-        Similarity.semDedupHierShardedByContentFromMat(spark, matPath,
+        Similarity.semDedupSliced(spark.read.parquet(matPath),
             "embedding", "vec_id", targetCell = 64L, tau = 0.8,
-            shardPlanes = planes, tables = tables, families = families,
-            shardLo = lo, shardHi = hi, parallelism = par)
+            Slicing.Materialized(planes, tables, lo, hi),
+            families = families, parallelism = par)
           .write.mode("overwrite").parquet(outPath)
         val wall = (System.nanoTime() - t0) / 1e9
         s"""{"cmd":"contentrun","planes":$planes,"tables":$tables,"shards":"$lo-$hi","families":$families,"parallelism":$par,"wall_sec":$wall,"out":"$outPath"}"""
@@ -218,7 +205,7 @@ object Receipts {
 
   /** The shared streaming-gate protocol (streamsem / streamsem2): per
     * FAMILY an independently seeded trained coarse quantizer at the
-    * semDedup target occupancy (the semDedupHierMulti seed convention,
+    * semDedup target occupancy (the semDedupSliced family seed convention,
     * seed = f·1000), whole corpus admitted as batch 0 into every
     * family's own tree, then ONE timed `gateBatchMulti` pass over the
     * already-persisted `batch`. Plants carry ids in [10⁹, 2·10⁹),
@@ -232,7 +219,7 @@ object Receipts {
     val k = Similarity.coarseCells(n, 64L)
     val fams = (0 until families).map { f =>
       val cents = Similarity.kmeans(vecs, "embedding", "vec_id",
-        k = k, iters = 2, seed = 1000 * f).localCheckpoint(true)
+        k = k, iters = 2, seed = 1000 * f).pipe(Checkpoints.pin)
       val ivf = tmp(s"$cmd-f$f")
       graft.streaming.StreamingVectorIndex.writeBatch(
         vecs.select(col("vec_id").as("cand_id"),

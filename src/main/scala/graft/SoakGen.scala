@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak-table generator: writes an N× scaled copy of the documents and
@@ -22,13 +21,7 @@ object SoakGen {
     val factor = factorS.toInt
     require(factor >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     val reps = spark.range(factor).select(col("id").as("_k"))
     // Replica ids collide silently if a source id reaches the shift —
     // assert the headroom up front (one cheap agg per scaled table)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,23 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE size the output partitions of CACHED plans too (round
-      // 20; guide §2.2): off, every persisted bounded intermediate
-      // (histograms, codebooks, signature tables, per-customer aggs)
-      // stays fanned across spark.sql.shuffle.partitions near-empty
-      // partitions and every consumer stage schedules that many tasks
-      // — the round-19 verdict's "tiny-frame overhead class". Scale-
-      // independent: AQE picks partition counts from bytes at any sf.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Optional subset for dev iteration: SPARK_GRAFT_QUERIES=q43_…,q52_…
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")

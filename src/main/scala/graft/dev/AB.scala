@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev diagnostic: interleaved A/B of a DYNAMIC SQL conf across declared
   * queries — both arms run alternately in the same JVM and window, so a
   * contended host inflates them equally (this sandbox shows 0-15% CPU
@@ -19,14 +17,7 @@ object AB {
     val valB = args(4)
     val pairs = if (args.length > 5) args(5).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     def clear(): Unit = {
       spark.sharedState.cacheManager.clearCache()

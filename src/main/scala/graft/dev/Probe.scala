@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic: run selected declared queries in isolation and print
   * per-stage wall/task-time breakdowns (guide §1 "measure first" — the
@@ -17,23 +16,7 @@ object Probe {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val passes = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE size the output partitions of CACHED plans too (round
-      // 20; guide §2.2): off, every persisted bounded intermediate
-      // (histograms, codebooks, signature tables, per-customer aggs)
-      // stays fanned across spark.sql.shuffle.partitions near-empty
-      // partitions and every consumer stage schedules that many tasks
-      // — the round-19 verdict's "tiny-frame overhead class". Scale-
-      // independent: AQE picks partition counts from bytes at any sf.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     case class St(id: Int, name: String, wallMs: Long, taskMs: Long,
                   nTasks: Int, submitted: Long)

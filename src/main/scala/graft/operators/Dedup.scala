@@ -199,8 +199,8 @@ object Dedup {
       spark.table(s"${prefix}_shingles"), snap, "doc_id")
     // materialize BEFORE the overwrite: the rewrite plan reads the very
     // tables it replaces, so stage the distinct rows first
-    val bandsD = bands.distinct().localCheckpoint(true)
-    val shD = sh.distinct().localCheckpoint(true)
+    val bandsD = Checkpoints.pin(bands.distinct())
+    val shD = Checkpoints.pin(sh.distinct())
     writeBandIndex(bandsD, shD, "doc_id", prefix, buckets)
   }
 
@@ -531,7 +531,7 @@ object Dedup {
     val snap = Tombstones.snapshot(spark, prefix) // see compactBandIndex
     val kept = Tombstones.filterWith(
         spark.table(s"${prefix}_winnow"), snap, idCol)
-      .localCheckpoint(true) // staged: the rewrite reads the table it replaces
+      .pipe(Checkpoints.pin) // staged: the rewrite reads the table it replaces
     ScaleJoins.writeBucketed(kept, s"${prefix}_winnow", "fp", buckets)
     Tombstones.retire(spark, prefix, snap)
     snap.foreach(Checkpoints.release)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -224,7 +226,7 @@ object Retrieval {
     val snap = Tombstones.snapshot(spark, prefix)
     val kept = Tombstones.filterWith(
         spark.table(s"${prefix}_postings"), snap, idCol)
-      .localCheckpoint(true) // staged: the rewrite reads the table it replaces
+      .pipe(Checkpoints.pin) // staged: the rewrite reads the table it replaces
     writeBm25IndexFromPostings(kept, idCol, prefix, buckets)
     Tombstones.retire(spark, prefix, snap)
     snap.foreach(Checkpoints.release)

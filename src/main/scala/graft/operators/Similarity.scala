@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -144,30 +146,6 @@ object Similarity {
       .getField("c")
   }
 
-  /** Per-group spherical k-means, all groups BATCHED in one frame —
-    * [[pqTrain]]'s batching applied to data-dependent groups instead of
-    * fixed subspaces: every `groupCol` value trains an INDEPENDENT
-    * codebook of `max(1, ⌈|group| / targetCell⌉)` cells (the
-    * [[autoCells]] arithmetic applied per group), with the same
-    * deterministic contract as [[kmeans]] — per-group lowest-hash init
-    * (ties by id), round-6 cosine argmax assignment (ties by smallest
-    * cid), exact-decimal mean update rounded to 9, empty cells keeping
-    * their previous centroid. Returns `(groupCol, centroid_id,
-    * centroid_vec)` — Σ ⌈|group|/targetCell⌉ ≈ n/targetCell rows.
-    *
-    * `maxCells` caps the per-group codebook (default: uncapped): past
-    * the cap, a group's cell count stops growing with the group, so
-    * assignment cost is bounded at |group| · maxCells dot products —
-    * and expected cell occupancy grows as |group| / maxCells instead
-    * of holding at targetCell (the documented trade; see
-    * [[semDedupHier]]'s kmax for who pays it and why).
-    *
-    * Scale shape: each Lloyd iteration joins vectors to ONLY their own
-    * group's centroids (equi-join on the group key — AQE broadcasts
-    * while the codebook is small and shuffle-joins past that), so the
-    * per-iteration cost is n · (cells per group), not n · (total
-    * cells). Callers should persist `vectors` across the passes.
-    */
   /** One Lloyd mean update with the empty-cell carry folded into the
     * SAME aggregation (round 20, guide §2.4/§1.2): members ride with
     * weight 1, the previous codebook rides with weight 0 through the
@@ -212,6 +190,30 @@ object Similarity {
         col("centroid_vec")): _*)
   }
 
+  /** Per-group spherical k-means, all groups BATCHED in one frame —
+    * [[pqTrain]]'s batching applied to data-dependent groups instead of
+    * fixed subspaces: every `groupCol` value trains an INDEPENDENT
+    * codebook of `max(1, ⌈|group| / targetCell⌉)` cells (the
+    * [[autoCells]] arithmetic applied per group), with the same
+    * deterministic contract as [[kmeans]] — per-group lowest-hash init
+    * (ties by id), round-6 cosine argmax assignment (ties by smallest
+    * cid), exact-decimal mean update rounded to 9, empty cells keeping
+    * their previous centroid. Returns `(groupCol, centroid_id,
+    * centroid_vec)` — Σ ⌈|group|/targetCell⌉ ≈ n/targetCell rows.
+    *
+    * `maxCells` caps the per-group codebook (default: uncapped): past
+    * the cap, a group's cell count stops growing with the group, so
+    * assignment cost is bounded at |group| · maxCells dot products —
+    * and expected cell occupancy grows as |group| / maxCells instead
+    * of holding at targetCell (the documented trade; see
+    * [[semDedupHier]]'s kmax for who pays it and why).
+    *
+    * Scale shape: each Lloyd iteration joins vectors to ONLY their own
+    * group's centroids (equi-join on the group key — AQE broadcasts
+    * while the codebook is small and shuffle-joins past that), so the
+    * per-iteration cost is n · (cells per group), not n · (total
+    * cells). Callers should persist `vectors` across the passes.
+    */
   def kmeansGrouped(vectors: DataFrame, vecCol: String, idCol: String,
                     groupCol: String, targetCell: Long, iters: Int,
                     seed: Int, maxCells: Int = Int.MaxValue): DataFrame = {
@@ -344,473 +346,248 @@ object Similarity {
         col("_b.cos").as("cos"))
   }
 
-  /** MULTI-FAMILY [[semDedupHier]] — the OR-of-quantizers recall dial
-    * for the flat form. [[semDedupHier]] is cell-local: a near-dup
-    * pair that straddles a fine-cell boundary is never a candidate,
-    * and the only dial the single quantizer offers is its geometry.
-    * Here `families` INDEPENDENT quantizer draws run side by side —
-    * family f trains with seeds `(seedCoarse + 1000·f,
-    * seedFine + 1000·f)`, so each family draws DIFFERENT cell
-    * boundaries from the same deterministic hash-rank init family —
-    * and a pair is caught when ANY family co-cells it: the rung-3 /
-    * [[multiTableBuckets]] OR-composition applied to the quantizer
-    * itself (the round-16 100× receipt measured two independent cell
-    * families catching 48/64 planted pairs where one quantizer caught
-    * 38). Recall of a pair with per-family co-cell probability p is
-    * 1 − (1−p)^families; cost is `families ×` the flat wall (each
-    * family is a full independent train + pair pass — nothing is
-    * shared, by design, since shared structure is what correlates the
-    * misses).
-    *
-    * Returns [[semDedupHier]]'s schema plus a leading `family`
-    * column; `family = 0` is byte-identical to [[semDedupHier]] with
-    * the same seeds (spec-pinned), and extra families only ADD
-    * dropped ids (the same id can recur across families with
-    * different partners — `distinct` on `idCol` for the drop set).
-    * Callers PERSIST `vectors` across the families (the [[kmeans]]
-    * contract): each family re-reads the input for its own count,
-    * trainings and pair pass, so an unpinned frame pays its full
-    * lineage `families ×` — q174 and `Receipts` both pin.
-    *
-    * `parallelism` > 1 runs that many family chains CONCURRENTLY from
-    * a bounded thread pool (the [[semDedupHierSharded]] fan-out note:
-    * each family's count + trainings + pair pass is an independent,
-    * fully deterministic job chain, its verdict pinned in its thread) —
-    * the families share nothing by design, so overlapping them
-    * back-fills the executor idle the sequential form leaves between
-    * each chain's many small stages. Row-identical to the sequential
-    * form (spec-pinned via [[unionSlices]]'s contract).
+  /** How [[semDedupSliced]] cuts the corpus into independent slices —
+    * the partitioner is the only thing the sliced plan varies (the
+    * REPOSE partition-then-local-search shape). Every case is a set of
+    * `tables` × `shards` slices; a case without tables or shards reads
+    * 0 in that output column.
     */
-  def semDedupHierMulti(vectors: DataFrame, vecCol: String, idCol: String,
-                        targetCell: Long, tau: Double, families: Int,
-                        iters: Int = 2, seedCoarse: Int = 31,
-                        seedFine: Int = 37,
-                        kmax: Int = Int.MaxValue,
-                        parallelism: Int = 1): DataFrame = {
-    require(families >= 1, "families must be >= 1")
-    unionSlices((0 until families).map { f => () =>
-      semDedupHier(vectors, vecCol, idCol, targetCell, tau, iters,
-        seedCoarse + 1000 * f, seedFine + 1000 * f, kmax)
-        .select(lit(f).as("family"), col("coarse"), col("cell"),
-          col(idCol), col("dup_of"), col("cos"))
-    }, parallelism)
+  sealed trait Slicing {
+    def tables: Int = 1
+    def shards: Range
   }
 
-  /** SHARDED [[semDedupHier]] — the fully corpus-LINEAR regime for
-    * corpora so large that even a binding `kmax` leaves super-linear
-    * residue: with the cap binding, assignment is linear but the
-    * within-cell pair pass inherits Σ|cell|² ≈ n²/kmax² (the
-    * [[semDedupHier]] scaladoc's documented trade). Here the corpus is
-    * first split into `shards` DETERMINISTIC hash shards (the q48
-    * shard-assignment arithmetic: `hash64(id, seed) % shards`, so any
-    * engine or re-run replays the split bit-for-bit) and each shard
-    * runs its own INDEPENDENT [[semDedupHier]] — per-shard n drops by
-    * the shard factor, every per-shard cost term (assignment, pair
-    * pass, codebook size) is evaluated at n/shards, and the union of
-    * verdicts is the result. Pick shards so n/shards sits inside the
-    * regime kmax²·targetCell covers and BOTH passes are linear at any
-    * corpus size: the 100 TB shape is shards ≈ n / (per-shard budget),
-    * i.e. shards grows with the corpus and per-shard work is constant.
+  object Slicing {
+
+    /** The whole corpus as one slice — the flat [[semDedupHier]]. */
+    case object Whole extends Slicing { def shards: Range = 0 to 0 }
+
+    /** `n` DETERMINISTIC id-hash shards, `hash64(id, 5) % n` (the q48
+      * shard-assignment arithmetic, so any engine or re-run replays the
+      * split bit-for-bit) — the fully corpus-LINEAR regime: with a
+      * binding `kmax` the within-cell pair pass still inherits
+      * Σ|cell|² ≈ n²/kmax² (the [[semDedupHier]] trade), and here every
+      * per-shard cost term is evaluated at n/shards instead. Pick `n`
+      * so n/shards sits inside the regime kmax²·targetCell covers: the
+      * 100 TB shape is shards ≈ n / (per-shard budget).
+      *
+      * SEMANTICS TRADE, accepted and explicit: pairs are only detected
+      * WITHIN a shard — a near-dup pair split across two shards is
+      * missed (probability (n−1)/n for a random pair; the published
+      * SemDeDup deployment dedups each training shard independently).
+      * [[Content]] co-locates near-dups BY CONSTRUCTION; id hashing
+      * deliberately does not. `n = 1` is byte-identical to
+      * [[semDedupHier]].
+      */
+    final case class IdHash(n: Int) extends Slicing {
+      require(n >= 1, "shards must be >= 1")
+      def shards: Range = 0 until n
+    }
+
+    /** CONTENT-keyed shards — closes the cross-shard miss [[IdHash]]
+      * accepts: the shard key is a `shardPlanes`-bit hyperplane code of
+      * the VECTOR ([[hyperplaneBucketAt]], the [[multiTableBuckets]]
+      * family), so a pair at angle θ co-locates with probability
+      * (1 − θ/π)^shardPlanes per table, ≈ 1 for the cos ≥ τ pairs
+      * SemDeDup exists to catch. `tables` independent shard families
+      * (table t draws planes [t·shardPlanes, (t+1)·shardPlanes), the
+      * rung-3 OR-composition) raise co-location recall at `tables`× the
+      * pass cost; a vector dropped under ANY (table, shard) is a drop.
+      *
+      * Hyperplane buckets over real embeddings are occupancy-SKEWED, so
+      * `shardPlanes` is a partition-count dial, not a balance guarantee;
+      * within-shard geometry derives from the shard's own n, so results
+      * are NOT byte-comparable to the flat form.
+      *
+      * DRIVER-LOOP COST: `tables · 2^shardPlanes` independent chains per
+      * family, all served by one driver — so `shardPlanes` is capped at
+      * 10 (≤ 1024 shards per table; tightened from 16 in round 17,
+      * deliberately). Past that, run shard ranges as separate JVMs over
+      * one [[materializeContentShards]] write ([[Materialized]]).
+      */
+    final case class Content(dims: Int, shardPlanes: Int,
+                             override val tables: Int = 1) extends Slicing {
+      require(shardPlanes >= 1 && shardPlanes <= 10,
+        "shardPlanes must be in [1, 10] — tables*2^shardPlanes " +
+          "independent job chains run from one driver loop")
+      require(tables >= 1, "tables must be >= 1")
+      def shards: Range = 0 until (1 << shardPlanes)
+    }
+
+    /** The CROSS-JVM half of the content-sharded fan-out: `vectors` is
+      * a read of an EXISTING [[materializeContentShards]] directory
+      * (its `_tbl`/`_shard` partition columns are the slice key) and
+      * only shards `shardLo to shardHi` run, all tables × all families
+      * of that range. Read-only, so independent JVMs can split one
+      * materialization by shard range and their unioned verdicts equal
+      * the single-JVM [[Content]] run over the same input (row-identical
+      * per (family, tbl, shard) — every chain is deterministic in its
+      * slice alone; spec-pinned, and the 100× receipt pins the unioned
+      * verdict_md5 across 1-vs-2 JVMs). The runnable recipe:
+      *
+      * {{{
+      * # once: Receipts contentmat /tmp/soak100 6 2 /tmp/mat
+      * # then, one JVM per shard range, concurrently:
+      * #   Receipts contentrun /tmp/soak100 6 2 /tmp/mat 0-31  /tmp/v0 1 8
+      * #   Receipts contentrun /tmp/soak100 6 2 /tmp/mat 32-63 /tmp/v1 1 8
+      * # finally: Receipts contentmd5 /tmp/v0 /tmp/v1
+      * }}}
+      *
+      * `parallelism` fans the JVM's own range out in-process — the two
+      * dials compose: JVMs × threads-per-JVM chains are in flight.
+      */
+    final case class Materialized(shardPlanes: Int, override val tables: Int,
+                                  shardLo: Int, shardHi: Int) extends Slicing {
+      require(shardPlanes >= 1 && shardPlanes <= 10,
+        "shardPlanes must be in [1, 10]")
+      require(tables >= 1, "tables must be >= 1")
+      require(shardLo >= 0 && shardHi < (1 << shardPlanes) &&
+        shardLo <= shardHi, s"shard range [$shardLo, $shardHi] must sit " +
+        s"inside [0, ${(1 << shardPlanes) - 1}]")
+      def shards: Range = shardLo to shardHi
+    }
+  }
+
+  /** SLICED, multi-family [[semDedupHier]]: for every family × table ×
+    * shard of `slicing`, one INDEPENDENT [[semDedupHier]] chain (its own
+    * count + two k-means trainings + pair pass) over that slice, the
+    * verdicts unioned. Returns one row per (family, slice, dropped id):
+    * `(family, tbl, shard, coarse, cell, <idCol>, dup_of, cos)` — the
+    * same id can recur across families and tables with different
+    * partners, so take `distinct` on `idCol` for the drop set.
     *
-    * SEMANTICS TRADE, accepted and explicit: duplicate pairs are only
-    * detected WITHIN a shard — a near-dup pair split across two shards
-    * is missed (probability (shards−1)/shards for a random pair, so
-    * this is a per-shard dedup, the published SemDeDup deployment shape
-    * where each training shard is deduped independently; global
-    * near-dup closure needs the unsharded form or a content-keyed
-    * pre-partition like [[Dedup]]'s LSH bands, which co-locate
-    * near-dups BY CONSTRUCTION — hash sharding by id deliberately does
-    * not). `shards = 1` is byte-identical to [[semDedupHier]] (same
-    * seeds; the shard filter keeps every row).
+    * FAMILIES — the OR-of-quantizers recall dial: [[semDedupHier]] is
+    * cell-local, so a near-dup pair straddling a fine-cell boundary is
+    * never a candidate. Family f trains every slice's quantizers with
+    * seeds `(31 + 1000·f, 37 + 1000·f)`, drawing DIFFERENT cell
+    * boundaries from the same deterministic hash-rank init, and a pair
+    * is caught when ANY family co-cells it (the round-16 100× receipt:
+    * two families caught 48/64 planted pairs where one caught 38).
+    * Recall for per-family co-cell probability p is 1 − (1−p)^families
+    * at `families ×` the cost — nothing is shared across families, by
+    * design, since shared structure is what correlates the misses.
+    * Family 0 of any slicing is byte-identical to the one-family run,
+    * and extra families only ADD drops (spec-pinned). Callers PERSIST
+    * `vectors` (the [[kmeans]] contract): every chain re-reads it.
     *
-    * Returns [[semDedupHier]]'s schema plus a leading `shard` column.
-    * The driver loop launches one independent job chain per shard —
-    * at 100 TB each shard is its own bounded unit of work (and the
-    * natural retry/checkpoint boundary).
+    * `matPath` — the READ-AMPLIFICATION rail of the hash slicings
+    * ([[Slicing.IdHash]], [[Slicing.Content]]): the default slice is a
+    * `filter` that re-scans the FULL input (and recomputes the shard
+    * code) once per (table, shard) — O(tables · shards) full passes.
+    * `matPath` assigns every row its per-table shard in ONE input pass,
+    * written as `_tbl=/_shard=` partitioned parquet (the
+    * [[materializeContentShards]] layout, shared across families), and
+    * every chain reads exactly its own partition via planning-time
+    * partition pruning: total read = one write + one read of the corpus
+    * at any shard depth. Row-identical to the filter form (spec-pinned;
+    * every per-slice step is row-order-insensitive). `matPath` is a
+    * SCRATCH path owned by this call — pre-existing data is destroyed
+    * and the write runs eagerly at composition time. Never point it at
+    * data you keep.
     *
-    * READ AMPLIFICATION, and the `matPath` rail: the default
-    * `filter(shardOf === s)` slice re-scans the FULL input once per
-    * shard — O(shards) read amplification, fine at a handful of
-    * shards but exactly wrong in the deep-shard regime this operator
-    * exists for (1000 shards of a 100 TB corpus would read 100 PB).
-    * Passing `matPath` materializes the shard assignment ONCE — one
-    * input pass writing `_shard=`-partitioned parquet (the
-    * [[ScaleJoins.writePartitioned]] layout) — and every per-shard
-    * sub-run then reads exactly its own partition via planning-time
-    * partition pruning (`PartitionFilters` in the scan, zero I/O for
-    * the other shards): total read = one write + one read of the
-    * corpus regardless of the shard count, and the shard key is
-    * computed once instead of once per sub-run. Row-identical to the
-    * filter form (spec-pinned — every per-shard step is
-    * row-order-insensitive by construction: hash-rank init, exact
-    * decimal means, total-ordered argmax windows).
-    *
-    * `matPath` is a SCRATCH path owned by this call: anything already
-    * there is destroyed (`mode("overwrite")`), and the materialization
-    * job runs eagerly at composition time — before the returned frame
-    * is ever consumed — because every slice's count/training reads it.
-    * Never point it at data you keep.
-    *
-    * `parallelism` > 1 runs that many per-shard chains CONCURRENTLY
-    * from a bounded thread pool — each chain's count + trainings +
-    * pair pass is submitted as independent Spark jobs and its verdict
-    * frame pinned inside its thread, so the driver-side serialization
-    * the scaladoc's fan-out note describes disappears without leaving
-    * the JVM (the separate-jobs recipe remains the cross-JVM form).
-    * Verdicts are row-identical to the sequential form (spec-pinned;
-    * the chains share nothing). Pair it with `matPath` so concurrent
-    * chains read pruned partitions instead of racing full input scans.
+    * `parallelism` > 1 runs that many chains CONCURRENTLY through
+    * [[Overlap.fanOut]], each verdict PINNED inside its thread (the
+    * eager materialization is what makes the concurrency real; a lazy
+    * union would serialize everything again at the first action), and
+    * an aborted fan-out releases the completed pins. The chains share
+    * nothing, so overlapping them back-fills the executor idle each
+    * chain's many small stages leave; row-identical to the sequential
+    * form (spec-pinned). Pair it with `matPath` so concurrent chains
+    * read pruned partitions instead of racing full input scans. The
+    * pins are final pins read lazily by the returned union —
+    * verdict-sized and reclaimed by reference-tracking cleanup.
     */
-  def semDedupHierSharded(vectors: DataFrame, vecCol: String, idCol: String,
-                          targetCell: Long, tau: Double, shards: Int,
-                          iters: Int = 2, seedCoarse: Int = 31,
-                          seedFine: Int = 37, shardSeed: Int = 5,
-                          kmax: Int = Int.MaxValue,
-                          matPath: Option[String] = None,
-                          parallelism: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be >= 1")
-    val shardOf = graft.functions.GraftFunctions.hash64(
-      col(idCol).cast("string"), shardSeed) % shards
-    val cols = vectors.columns.toSeq
-    val shardSlice: Int => DataFrame = matPath match {
-      case None => s => vectors.filter(shardOf === s.toLong)
+  def semDedupSliced(vectors: DataFrame, vecCol: String, idCol: String,
+      targetCell: Long, tau: Double, slicing: Slicing = Slicing.Whole,
+      families: Int = 1, kmax: Int = Int.MaxValue,
+      matPath: Option[String] = None, parallelism: Int = 1): DataFrame = {
+    require(families >= 1, "families must be >= 1")
+    val slice = sliceOf(vectors, vecCol, idCol, slicing, matPath)
+    val chains = for { f <- 0 until families; tbl <- 0 until slicing.tables;
+                       s <- slicing.shards } yield { () =>
+      semDedupHier(slice(tbl, s), vecCol, idCol, targetCell, tau,
+        seedCoarse = 31 + 1000 * f, seedFine = 37 + 1000 * f, kmax = kmax)
+        .select(lit(f).as("family"), lit(tbl).as("tbl"),
+          lit(s.toLong).as("shard"), col("coarse"), col("cell"),
+          col(idCol), col("dup_of"), col("cos"))
+    }
+    val run =
+      if (parallelism == 1) chains
+      else chains.map(c => () => Checkpoints.pin(c()))
+    Overlap.fanOut(run, parallelism, Checkpoints.release)
+      .reduce(_ unionByName _)
+  }
+
+  /** The (table, shard) → input slice of a [[Slicing]]: the hash
+    * slicings filter on their shard code, or with `matPath` write the
+    * keyed materialization once and read back pruned partitions (the
+    * [[semDedupSliced]] read-amplification note); [[Slicing.Materialized]]
+    * reads the pruned partitions of the materialization it is given.
+    */
+  private def sliceOf(vectors: DataFrame, vecCol: String, idCol: String,
+      slicing: Slicing, matPath: Option[String]): (Int, Int) => DataFrame = {
+    def partition(keyed: DataFrame, cols: Seq[String]) = (tbl: Int, s: Int) =>
+      keyed.filter(col("_tbl") === tbl && col("_shard") === s)
+        .select(cols.map(col): _*)
+    def hashed(codes: Seq[Column]) = matPath match {
+      case None => (tbl: Int, s: Int) => vectors.filter(codes(tbl) === s)
       case Some(p) =>
-        val keyed = vectors.withColumn("_shard", shardOf)
-        keyed.write.mode("overwrite").partitionBy("_shard").parquet(p)
-        // explicit schema: inference-free (the partition column's type
-        // is declared, not re-derived from directory names) and an
+        // explicit schema: inference-free (the partition columns' types
+        // are declared, not re-derived from directory names) and an
         // EMPTY corpus reads back as an empty frame instead of failing
         // schema inference on a data-less directory
-        val mat = vectors.sparkSession.read.schema(keyed.schema).parquet(p)
-        s => mat.filter(col("_shard") === s).select(cols.map(col): _*)
+        val schema = materializeShards(vectors, codes, p)
+        partition(vectors.sparkSession.read.schema(schema).parquet(p),
+          vectors.columns.toSeq)
     }
-    unionSlices((0 until shards).map { s => () =>
-      semDedupHier(shardSlice(s), vecCol, idCol,
-        targetCell, tau, iters, seedCoarse, seedFine, kmax)
-        .select(lit(s.toLong).as("shard"), col("coarse"), col("cell"),
-          col(idCol), col("dup_of"), col("cos"))
-    }, parallelism)
-  }
-
-  /** Union the per-slice verdict frames, sequentially (`parallelism`
-    * = 1, the frames stay lazy — exactly the old reduce) or from a
-    * bounded thread pool: each slice's whole chain (count, trainings,
-    * pair pass) runs inside its thread and the verdict is PINNED there
-    * ([[Checkpoints.pin]] — the eager materialization is what makes
-    * the concurrency real; a lazy union would serialize everything
-    * again at the first action). Slice chains are independent by
-    * construction, and every per-shard step is row-order-insensitive,
-    * so the union is row-identical either way (spec-pinned). The pins
-    * are final pins read lazily by the returned union — storage is
-    * verdict-sized (drops only) and reclaimed by reference-tracking
-    * cleanup, the [[Checkpoints.pin]] final-pin contract.
-    *
-    * ABORT path, explicit: when any slice chain throws, the fan-out
-    * does not leave the other chains running against a dead caller —
-    * every in-flight chain's Spark jobs are cancelled (each pool
-    * thread tags its jobs with a per-fan-out job group;
-    * `cancelJobGroup` interrupts them), queued chains that have not
-    * started refuse to (the abort flag), the settle wait for the
-    * now-cancelled threads is BOUNDED (10 min — a backstop, the
-    * cancellation is what actually unsticks a stalled chain), and the
-    * pins of every slice that DID complete are released before the
-    * original failure rethrows — an aborted fan-out leaks neither
-    * running jobs nor pinned verdict frames.
-    */
-  private def unionSlices(slices: Seq[() => DataFrame],
-                          parallelism: Int): DataFrame = {
-    require(parallelism >= 1, "parallelism must be >= 1")
-    if (parallelism == 1) slices.map(_()).reduce(_ unionByName _)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.{Duration, DurationInt}
-      import scala.util.{Success, Try}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, slices.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val group = s"graft-fanout-${java.util.UUID.randomUUID()}"
-      val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val futures = slices.map { s => Future {
-        if (aborted.get())
-          throw new InterruptedException("fan-out aborted by a failed slice")
-        // tag this thread's jobs BEFORE the slice runs — the chains do
-        // their eager work (trainings, pair passes) inside s(), and
-        // untagged jobs would survive an abort's cancelJobGroup
-        val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-        sc.setJobGroup(group, "graft sharded fan-out slice",
-          interruptOnCancel = true)
-        try Checkpoints.pin(s()) finally sc.clearJobGroup()
-      } }
-      try
-        Await.result(Future.sequence(futures), Duration.Inf)
-          .reduce(_ unionByName _)
-      catch { case e: Throwable =>
-        aborted.set(true)
-        Try(org.apache.spark.sql.SparkSession.active.sparkContext
-          .cancelJobGroup(group))
-        // settle every thread (bounded — cancellation is the unstick),
-        // then free the completed slices' pins before rethrowing
-        Try(Await.result(
-            Future.sequence(futures.map(_.transform(Success(_)))),
-            10.minutes))
-          .toOption.toSeq.flatten.foreach {
-            case Success(df) => Try(Checkpoints.release(df))
-            case _           => ()
-          }
-        throw e
-      } finally pool.shutdown()
+    val noMat = s"matPath materializes a hash slicing, not $slicing"
+    slicing match {
+      case Slicing.Whole =>
+        require(matPath.isEmpty, noMat)
+        (_, _) => vectors
+      case Slicing.IdHash(n) =>
+        hashed(Seq(graft.functions.GraftFunctions.hash64(
+          col(idCol).cast("string"), 5) % n))
+      case Slicing.Content(dims, planes, tables) =>
+        hashed(contentCodes(vecCol, dims, planes, tables))
+      case _: Slicing.Materialized =>
+        require(matPath.isEmpty, noMat)
+        partition(vectors,
+          vectors.columns.filterNot(Set("_tbl", "_shard")).toSeq)
     }
   }
 
-  /** CONTENT-keyed sharded [[semDedupHier]] — closes the cross-shard
-    * miss [[semDedupHierSharded]] accepts. Id-hash sharding scatters a
-    * near-dup pair across shards with probability (shards−1)/shards;
-    * here the shard key is a `shardPlanes`-bit hyperplane code of the
-    * VECTOR itself ([[hyperplaneBucketAt]], the [[multiTableBuckets]]
-    * family), so near-identical vectors land in the same shard BY
-    * CONSTRUCTION — a pair at angle θ co-locates with probability
-    * (1 − θ/π)^shardPlanes per table, ≈ 1 for the cos ≥ τ pairs
-    * SemDeDup exists to catch. `tables` independent shard families
-    * (table t drawn from [[hpComponent]] slice [t·shardPlanes,
-    * (t+1)·shardPlanes), exactly the rung-3 OR-composition) raise the
-    * co-location recall to 1 − (θ/π-miss)^tables at `tables`× the
-    * pass cost; a vector dropped under ANY (table, shard) is a drop —
-    * take `distinct` on `idCol` for the drop set (the same id can
-    * carry one row per agreeing table, possibly with different
-    * `dup_of` partners).
-    *
-    * Cost/semantics vs the id-hash form: shards = 2^shardPlanes per
-    * table, each running an INDEPENDENT [[semDedupHier]] at its
-    * occupancy, so every per-shard cost term is evaluated at ~n/2^b —
-    * the same linear-regime rail — but hyperplane buckets over real
-    * embeddings are occupancy-SKEWED (sign codes are not balanced
-    * partitions), so `shardPlanes` is a partition-count dial, not a
-    * balance guarantee; the binding-`kmax` rail composes per shard for
-    * the skewed-cell regime. Within-shard geometry derives from the
-    * shard's own n (count, codebooks, cells), so results are NOT
-    * byte-comparable to the flat form — what IS pinned (SemDedupSpec)
-    * is that the output equals the per-(table, shard) manual replay
-    * and that a planted cross-id-shard near-dup pair invisible to
-    * [[semDedupHierSharded]] is caught here.
-    *
-    * Returns [[semDedupHier]]'s schema plus leading `(tbl, shard)`.
-    *
-    * DRIVER-LOOP COST, explicit: the plan is `tables · 2^shardPlanes`
-    * INDEPENDENT [[semDedupHier]] job chains (each its own count +
-    * two k-means trainings + pair pass) union-reduced into one frame
-    * — the per-shard chain is the unit of work the deep-shard design
-    * wants, but the DRIVER serves every chain, so `shardPlanes` is
-    * capped at 10 (≤ 1024 shards per table; TIGHTENED from 16 in
-    * round 17 — shardPlanes 11–16 calls that used to be accepted now
-    * throw, deliberately: 2^16 chains per table is not a regime one
-    * driver loop sustains; past 10, run the per-shard chains as
-    * separate JVMs over the `matPath` materialization via
-    * [[semDedupHierShardedByContentFromMat]] shard ranges — the
-    * runnable `Receipts contentmat`/`contentrun`/`contentmd5` recipe
-    * in that scaladoc, receipted in BASELINE.md with two concurrent
-    * JVMs verdict_md5-identical to the single-JVM run).
-    * `parallelism` > 1 runs that many chains concurrently from a
-    * bounded thread pool WITHIN this driver (the
-    * [[semDedupHierSharded]] note: verdicts pinned per thread,
-    * row-identical to sequential, spec-pinned) — the in-JVM form of
-    * the fan-out, receipted in BASELINE.md at the q172 deployment
-    * point.
-    *
-    * READ AMPLIFICATION, and the `matPath` rail (the
-    * [[semDedupHierSharded]] note, worse here because shard counts
-    * are per TABLE): the default slice recomputes the hyperplane code
-    * over the full corpus once per (table, shard) — O(tables · 2^b)
-    * full-input scans AND code recomputations. `matPath` assigns
-    * every row its per-table shard in ONE input pass (the
-    * [[multiTableBuckets]] fan-out written as `_tbl=/_shard=`
-    * partitioned parquet, `tables` rows per input row) and each
-    * sub-run prunes to exactly one partition at planning time — total
-    * read is one pass + one `tables`-sized write at any shard depth,
-    * and the dims × planes dot products run once per (row, table)
-    * instead of once per (row, table, shard). `matPath` is a SCRATCH
-    * path owned by this call: pre-existing data there is destroyed
-    * (`mode("overwrite")`) and the write runs eagerly at composition
-    * time — never point it at data you keep.
-    */
-  def semDedupHierShardedByContent(vectors: DataFrame, vecCol: String,
-      idCol: String, dims: Int, targetCell: Long, tau: Double,
-      shardPlanes: Int, tables: Int = 1, iters: Int = 2,
-      seedCoarse: Int = 31, seedFine: Int = 37,
-      kmax: Int = Int.MaxValue,
-      matPath: Option[String] = None,
-      parallelism: Int = 1): DataFrame = {
-    require(shardPlanes >= 1 && shardPlanes <= 10,
-      "shardPlanes must be in [1, 10] — tables*2^shardPlanes " +
-        "independent job chains run from one driver loop")
-    require(tables >= 1, "tables must be >= 1")
-    val shards = 1 << shardPlanes
-    val slice = contentSlices(vectors, vecCol, dims, shardPlanes, tables,
-      matPath)
-    unionSlices(
-      (for { tbl <- 0 until tables; s <- 0 until shards } yield { () =>
-        semDedupHier(slice(tbl, s), vecCol, idCol, targetCell, tau, iters,
-          seedCoarse, seedFine, kmax)
-          .select(lit(tbl).as("tbl"), lit(s.toLong).as("shard"),
-            col("coarse"), col("cell"), col(idCol), col("dup_of"),
-            col("cos"))
-      }), parallelism)
-  }
+  /** The per-table content shard codes: table t is the `shardPlanes`-bit
+    * [[hyperplaneBucketAt]] code over planes [t·shardPlanes, …). */
+  private def contentCodes(vecCol: String, dims: Int, shardPlanes: Int,
+                           tables: Int): Seq[Column] =
+    (0 until tables).map(t =>
+      hyperplaneBucketAt(col(vecCol), dims, shardPlanes, t * shardPlanes))
 
-  /** The per-(table, shard) input slice of the content-sharded forms:
-    * the filter form recomputes the plane-slice code per call; the
-    * `matPath` form assigns every row its per-table shard in ONE input
-    * pass and reads back pruned partitions (the
-    * [[semDedupHierShardedByContent]] read-amplification note — the
-    * write is eager and owns the path).
-    */
-  private def contentSlices(vectors: DataFrame, vecCol: String, dims: Int,
-      shardPlanes: Int, tables: Int,
-      matPath: Option[String]): (Int, Int) => DataFrame = {
-    val cols = vectors.columns.toSeq
-    matPath match {
-      case None => (tbl, s) =>
-        vectors.filter(
-          hyperplaneBucketAt(col(vecCol), dims, shardPlanes,
-            tbl * shardPlanes) === s)
-      case Some(p) =>
-        // ONE input pass: multiTableBuckets fans each row into its
-        // `tables` (table, code) rows with the identical per-table
-        // plane-slice arithmetic the filter form evaluates per shard
-        val schema = materializeContentShards(vectors, vecCol, dims,
-          shardPlanes, tables, p)
-        // explicit schema: inference-free, and an empty corpus reads
-        // back empty instead of failing inference (the id-hash note)
-        val mat = vectors.sparkSession.read.schema(schema).parquet(p)
-        (tbl, s) => mat
-          .filter(col("_tbl") === tbl && col("_shard") === s)
-          .select(cols.map(col): _*)
-    }
-  }
-
-  /** Write the content-shard materialization the sharded forms read —
-    * `tables` rows per input row, `_tbl=/_shard=` partitioned parquet
-    * at `path` (a SCRATCH path owned by this call — pre-existing data
-    * is destroyed). Public so an ORCHESTRATOR can write it once and
-    * fan the per-shard chains out as separate JVMs over
-    * [[semDedupHierShardedByContentFromMat]] shard ranges; returns the
-    * written schema (pass it back to the readers for inference-free,
-    * empty-safe reads — optional, the readers infer when not given).
-    */
-  def materializeContentShards(vectors: DataFrame, vecCol: String,
-      dims: Int, shardPlanes: Int, tables: Int,
+  /** ONE input pass: every row fans into its per-table `(_tbl, _shard)`
+    * rows (the [[multiTableBuckets]] shape), written `_tbl=/_shard=`
+    * partitioned at the scratch `path`; returns the written schema. */
+  private def materializeShards(vectors: DataFrame, codes: Seq[Column],
       path: String): org.apache.spark.sql.types.StructType = {
-    val keyed = multiTableBuckets(vectors, vecCol, dims, shardPlanes,
-      tables, "_tbl", "_shard")
+    val keyed = vectors.select(col("*"),
+      posexplode(array(codes: _*)).as(Seq("_tbl", "_shard")))
     keyed.write.mode("overwrite").partitionBy("_tbl", "_shard").parquet(path)
     keyed.schema
   }
 
-  /** The CROSS-JVM half of the content-sharded fan-out: run the
-    * per-(family, table, shard) [[semDedupHier]] chains for an
-    * EXISTING [[materializeContentShards]] materialization — read-only
-    * against `matPath`, covering only shards in `[shardLo, shardHi]`
-    * (all tables × all families of that range) — so independent JVMs
-    * can split one materialization by shard range and their unioned
-    * verdicts equal the single-JVM
-    * [[semDedupHierShardedByContentMulti]] run over the same input
-    * (row-identical per (family, tbl, shard) — every chain is
-    * deterministic in the slice alone; spec-pinned, and the 100×
-    * receipt pins the unioned verdict_md5 across 1-vs-2 JVMs). The
-    * runnable recipe, exactly as the BASELINE receipt executes it:
-    *
-    * {{{
-    * # once: Receipts contentmat /tmp/soak100 6 2 /tmp/mat
-    * # then, one JVM per shard range, concurrently:
-    * #   Receipts contentrun /tmp/soak100 6 2 /tmp/mat 0-31  /tmp/v0 1 8
-    * #   Receipts contentrun /tmp/soak100 6 2 /tmp/mat 32-63 /tmp/v1 1 8
-    * # finally: Receipts contentmd5 /tmp/v0 /tmp/v1
-    * }}}
-    *
-    * `parallelism` fans this JVM's own range out in-process (the
-    * [[semDedupHierSharded]] thread-pool note) — the two dials
-    * compose: JVMs × threads-per-JVM chains are in flight. Each JVM's
-    * result schema is [[semDedupHierShardedByContentMulti]]'s
-    * (leading `family`, `tbl`, `shard`).
+  /** Write the content-shard materialization [[Slicing.Content]] reads
+    * with a `matPath` — `tables` rows per input row, `_tbl=/_shard=`
+    * partitioned parquet at `path` (a SCRATCH path owned by this call —
+    * pre-existing data is destroyed). Public so an ORCHESTRATOR can
+    * write it once and fan the per-shard chains out as separate JVMs,
+    * each reading it through [[Slicing.Materialized]] shard ranges;
+    * returns the written schema.
     */
-  def semDedupHierShardedByContentFromMat(spark: org.apache.spark.sql.SparkSession,
-      matPath: String, vecCol: String, idCol: String, targetCell: Long,
-      tau: Double, shardPlanes: Int, tables: Int = 1, families: Int = 1,
-      shardLo: Int = 0, shardHi: Int = -1, iters: Int = 2,
-      seedCoarse: Int = 31, seedFine: Int = 37,
-      kmax: Int = Int.MaxValue, parallelism: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    require(shardPlanes >= 1 && shardPlanes <= 10,
-      "shardPlanes must be in [1, 10]")
-    require(tables >= 1, "tables must be >= 1")
-    require(families >= 1, "families must be >= 1")
-    val shards = 1 << shardPlanes
-    val hi = if (shardHi < 0) shards - 1 else shardHi
-    require(shardLo >= 0 && hi < shards && shardLo <= hi,
-      s"shard range [$shardLo, $hi] must sit inside [0, ${shards - 1}]")
-    val reader = spark.read
-    val mat = schema.fold(reader.parquet(matPath))(s =>
-      reader.schema(s).parquet(matPath))
-    val dataCols = mat.columns.filterNot(Set("_tbl", "_shard")).toSeq
-    val slice = (tbl: Int, s: Int) => mat
-      .filter(col("_tbl") === tbl && col("_shard") === s)
-      .select(dataCols.map(col): _*)
-    unionSlices(
-      (for { f <- 0 until families; tbl <- 0 until tables;
-             s <- shardLo to hi } yield { () =>
-        semDedupHier(slice(tbl, s), vecCol, idCol, targetCell, tau, iters,
-          seedCoarse + 1000 * f, seedFine + 1000 * f, kmax)
-          .select(lit(f).as("family"), lit(tbl).as("tbl"),
-            lit(s.toLong).as("shard"), col("coarse"), col("cell"),
-            col(idCol), col("dup_of"), col("cos"))
-      }), parallelism)
-  }
-
-  /** [[semDedupHierShardedByContent]] × the quantizer-FAMILIES dial —
-    * the composed deployment point a recall-sensitive sharded run
-    * actually wants: content sharding closes the CROSS-shard miss
-    * (near-dups co-locate by construction), the [[semDedupHierMulti]]
-    * families close the WITHIN-shard cell-straddle miss (family f
-    * trains each shard's quantizers with seeds `(seedCoarse + 1000·f,
-    * seedFine + 1000·f)`; a pair is caught when ANY family co-cells it
-    * inside ANY agreeing (table, shard)). The two dials multiply in
-    * cost — `families × tables × 2^shardPlanes` chains — but the
-    * `matPath` materialization is written ONCE and shared across
-    * families (the shard key is family-independent), so the input is
-    * still read one time plus one `tables`-sized write no matter how
-    * many families run; `parallelism` fans the chains out as in the
-    * base form.
-    *
-    * Returns the base form's schema with a leading `family` column;
-    * `family = 0` rows are exactly [[semDedupHierShardedByContent]]
-    * with the same arguments (spec-pinned), and extra families only
-    * ADD dropped ids — `distinct` on `idCol` for the drop set.
-    */
-  def semDedupHierShardedByContentMulti(vectors: DataFrame, vecCol: String,
-      idCol: String, dims: Int, targetCell: Long, tau: Double,
-      shardPlanes: Int, tables: Int = 1, families: Int = 1,
-      iters: Int = 2, seedCoarse: Int = 31, seedFine: Int = 37,
-      kmax: Int = Int.MaxValue,
-      matPath: Option[String] = None,
-      parallelism: Int = 1): DataFrame = {
-    require(shardPlanes >= 1 && shardPlanes <= 10,
-      "shardPlanes must be in [1, 10] — tables*2^shardPlanes " +
-        "independent job chains run from one driver loop")
-    require(tables >= 1, "tables must be >= 1")
-    require(families >= 1, "families must be >= 1")
-    val shards = 1 << shardPlanes
-    val slice = contentSlices(vectors, vecCol, dims, shardPlanes, tables,
-      matPath)
-    unionSlices(
-      (for { f <- 0 until families; tbl <- 0 until tables;
-             s <- 0 until shards } yield { () =>
-        semDedupHier(slice(tbl, s), vecCol, idCol, targetCell, tau, iters,
-          seedCoarse + 1000 * f, seedFine + 1000 * f, kmax)
-          .select(lit(f).as("family"), lit(tbl).as("tbl"),
-            lit(s.toLong).as("shard"), col("coarse"), col("cell"),
-            col(idCol), col("dup_of"), col("cos"))
-      }), parallelism)
-  }
+  def materializeContentShards(vectors: DataFrame, vecCol: String,
+      dims: Int, shardPlanes: Int, tables: Int,
+      path: String): org.apache.spark.sql.types.StructType =
+    materializeShards(vectors, contentCodes(vecCol, dims, shardPlanes, tables),
+      path)
 
   /** Sign-of-projection bucket code (0 .. 2^planes-1) for a vector
     * column: one zip_with dot product per plane against a literal
@@ -863,9 +640,8 @@ object Similarity {
   def multiTableBuckets(df: DataFrame, vecCol: String, dims: Int,
       planes: Int, tables: Int, tblOut: String, bktOut: String): DataFrame = {
     require(tables >= 1, "tables must be >= 1")
-    df.select(col("*"), posexplode(array((0 until tables).map(t =>
-      hyperplaneBucketAt(col(vecCol), dims, planes, t * planes)): _*))
-      .as(Seq(tblOut, bktOut)))
+    df.select(col("*"), posexplode(array(
+      contentCodes(vecCol, dims, planes, tables): _*)).as(Seq(tblOut, bktOut)))
   }
 
   /** Brute-force cosine top-k: for each probe vector, the `k` nearest
@@ -1098,7 +874,7 @@ object Similarity {
     val snap = Tombstones.snapshot(spark, prefix)
     val kept = Tombstones.filterWith(
         spark.table(s"${prefix}_lists"), snap, "cand_id")
-      .localCheckpoint(true) // staged: the rewrite reads the table it replaces
+      .pipe(Checkpoints.pin) // staged: the rewrite reads the table it replaces
     ScaleJoins.writeBucketed(kept, s"${prefix}_lists", "cell", buckets)
     Tombstones.retire(spark, prefix, snap)
     snap.foreach(Checkpoints.release)

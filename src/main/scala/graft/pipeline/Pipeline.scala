@@ -32,13 +32,12 @@ object Pipeline {
       atsPayloads: DataFrame,
       searchResults: DataFrame)
 
-  /** @param observations per-stage row counts (the reference's console
+  /** @param rejects articles dropped at enrichment, with a reason — the
+    *   side-output twin of the reference's print-and-skip.
+    * @param observations per-stage row counts (the reference's console
     *   progress lines, main.py:44,54-55,67,131 — here as zero-cost
     *   `observe` metrics piggybacked on whatever action runs; read with
     *   `observations("ingested").get` after an action).
-    */
-  /** @param rejects articles dropped at enrichment, with a reason — the
-    *   side-output twin of the reference's print-and-skip.
     */
   case class Result(
       batch: DataFrame,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions.words
-import graft.operators.Dedup
+import graft.operators.{Checkpoints, Dedup}
 
 /** Streaming near-dup gate — the continuous form of q54's incremental
   * dedup: a stream of documents where each micro-batch
@@ -144,8 +144,8 @@ object StreamingContentDedup {
     val sh = shingled(corpus)
     // materialize BEFORE the overwrite (the compactBandIndexWith
     // note): the corpus frame may read through catalog state
-    val bands = banded(sh).localCheckpoint(true)
-    val shD = sh.select(col("doc_id"), col("sh")).localCheckpoint(true)
+    val bands = Checkpoints.pin(banded(sh))
+    val shD = Checkpoints.pin(sh.select(col("doc_id"), col("sh")))
     Dedup.writeBandIndex(bands, shD, "doc_id", prefix, buckets)
   }
 }

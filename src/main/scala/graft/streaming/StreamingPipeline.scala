@@ -1,11 +1,14 @@
 package graft.streaming
 
+import scala.util.chaining._
+
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.Checkpoints
 import graft.pipeline.{Pipeline, Stages}
 import graft.sources.PushSinks
 
@@ -80,7 +83,7 @@ class StreamingPipeline(
     val alerts = result.alerts
       .withColumn("batch_id", lit(batchId))
       .withColumn("batch_key", lit(s"$runKey-$batchId"))
-      .localCheckpoint(true) // pin: one computation feeds append + POST
+      .pipe(Checkpoints.pin) // pin: one computation feeds append + POST
     // Idempotent per batch: a replayed batch (e.g. after a failed
     // outbound POST below) OVERWRITES its own (runKey, batchId)
     // partition instead of appending duplicate rows — alertsDir keeps

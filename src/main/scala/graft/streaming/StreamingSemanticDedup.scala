@@ -61,8 +61,9 @@ object StreamingSemanticDedup {
     gateBatchMulti(spark, batch, idCol, vecCol,
       Seq(QuantizerFamily(centroids, indexPath)), tau, nprobe, tombstones)
 
-  /** The FAMILIES dial on the gate — the [[graft.operators.Similarity.semDedupHierMulti]]
-    * OR-composition applied in-stream, closing the recall floor the
+  /** The FAMILIES dial on the gate — the `families`
+    * OR-composition of [[graft.operators.Similarity.semDedupSliced]]
+    * applied in-stream, closing the recall floor the
     * single quantizer leaves: `nprobe` saturates once every probed
     * cell is exhausted (the BASELINE round-17 streamsem receipt:
     * recall flat at 0.922 past nprobe = 4 because the residual misses

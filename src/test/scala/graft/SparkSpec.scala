@@ -21,8 +21,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the mains' engine conf (GraftSession), plus the suite's own
+    // warehouse and optimizer exclusion
+    val s = GraftSession.builder(4)
       .appName("graft-test")
       // fresh warehouse per test JVM: catalog tables (band indexes,
       // tombstones) must not leak between `sbt test` runs — especially
@@ -33,14 +34,6 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse")
           .toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // same engine default as Bench/Verify (round 20): AQE may re-size
-      // cached-plan output partitions — tests run under the shipped config
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
       .getOrCreate()

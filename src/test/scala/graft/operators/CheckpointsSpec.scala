@@ -81,4 +81,35 @@ class CheckpointsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
+
+  test("StreamingPipeline.processBatch pins through Checkpoints: reliable " +
+    "checkpoint files land under the configured dir") {
+    import graft.pipeline.DemoFixtures
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-leads")
+    val out = java.nio.file.Files.createTempDirectory("graft-leads-out")
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val fx = DemoFixtures(spark)
+      new graft.streaming.StreamingPipeline(spark, fx,
+          storeDir = s"$out/store", alertsDir = s"$out/alerts",
+          asOf = DemoFixtures.AsOf)
+        .processBatch(fx.feedEntries, 0L)
+      // the alert pin is the batch's only materialization: with a
+      // checkpoint dir it must be a reliable checkpoint (an rdd-N dir),
+      // not executor-local blocks
+      val rddDirs = java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("rdd-"))
+        .toList
+      assert(rddDirs.nonEmpty,
+        s"processBatch must write reliable checkpoint files under $dir")
+      assert(spark.read.parquet(s"$out/alerts").count() > 0,
+        "the pinned alerts must still reach the alerts sink")
+    } finally {
+      org.apache.spark.GraftCheckpointTestHook.clear(sc)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    }
+  }
 }

@@ -5,11 +5,19 @@ import graft.SparkSpec
 /** [[Similarity.semDedup]]: keep-first verdicts within a cell, the
   * reported kept partner, cell-locality of the candidate pairs, and
   * determinism across reruns.
+  *
+  * The [[Similarity.semDedupSliced]] cases keep the titles they had when
+  * each slicing was its own entry point: `semDedupHierSharded` is
+  * [[Similarity.Slicing.IdHash]], `…ShardedByContent` is
+  * [[Similarity.Slicing.Content]], `…FromMat` is
+  * [[Similarity.Slicing.Materialized]] and `…Multi` is `families`.
   */
 class SemDedupSpec extends SparkSpec {
 
   import org.apache.spark.sql.functions._
   import spark.implicits._
+  import Similarity.Slicing
+  import scala.jdk.CollectionConverters._
 
   // axis-aligned 2-cell quantizer
   private def cents = Seq(
@@ -210,14 +218,15 @@ class SemDedupSpec extends SparkSpec {
     }
     val twins = base.map { case (id, v) => (id - 100L, v) }
     val df = (base ++ twins).toDF("vec_id", "embedding")
-    val one = Similarity.semDedupHierSharded(df, "embedding", "vec_id",
-        targetCell = 1L, tau = 0.999999, shards = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
+    val one = Similarity.semDedupSliced(df, "embedding", "vec_id",
+        targetCell = 1L, tau = 0.999999, Slicing.IdHash(1))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
+    // the unused family and table dimensions read 0
     val flat = Similarity.semDedupHier(df, "embedding", "vec_id",
         targetCell = 1L, tau = 0.999999)
-      .collect().map(r => (0L, r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
+      .collect().map(r => (0, 0, 0L, r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getLong(3))).toSet
     assert(one == flat, "shards = 1 must be the unsharded verdict set")
 
     // the q48 shard arithmetic, recomputed here: hash64(id, seed=5) % 2
@@ -229,8 +238,9 @@ class SemDedupSpec extends SparkSpec {
     // the md5 split separates several twin pairs)
     assert(sameShard.nonEmpty && sameShard.size < 12,
       s"fixture must mix same- and cross-shard twin pairs: $sameShard")
-    val sharded = Similarity.semDedupHierSharded(df, "embedding", "vec_id",
-        targetCell = 1L, tau = 0.999999, shards = 2)
+    val sharded = Similarity.semDedupSliced(df, "embedding", "vec_id",
+        targetCell = 1L, tau = 0.999999, Slicing.IdHash(2))
+      .drop("family", "tbl")
       .collect().map(r => (r.getLong(3), r.getLong(4), r.getLong(0))).toSet
     for (i <- 0 until 12) {
       val hit = sharded.exists(p => p._1 == 100L + i && p._2 == i.toLong)
@@ -262,8 +272,9 @@ class SemDedupSpec extends SparkSpec {
       .filter(i => shard4(i) != shard4(100L + i))
     assert(crossPairs.nonEmpty,
       "fixture must exercise the documented cross-shard miss")
-    val idSharded = Similarity.semDedupHierSharded(df, "embedding", "vec_id",
-        targetCell = 1L, tau = 0.999999, shards = 4)
+    val idSharded = Similarity.semDedupSliced(df, "embedding", "vec_id",
+        targetCell = 1L, tau = 0.999999, Slicing.IdHash(4))
+      .drop("family", "tbl")
       .collect().map(r => (r.getLong(3), r.getLong(4))).toSet
     crossPairs.foreach { i =>
       assert(!idSharded.contains((100L + i, i)),
@@ -272,8 +283,10 @@ class SemDedupSpec extends SparkSpec {
     // content sharding: identical vectors share every hyperplane sign,
     // so ALL 12 pairs co-locate and drop — including every cross-id-shard
     // pair above
-    val content = Similarity.semDedupHierShardedByContent(df, "embedding",
-        "vec_id", dims = 2, targetCell = 1L, tau = 0.999999, shardPlanes = 2)
+    val content = Similarity.semDedupSliced(df, "embedding",
+        "vec_id", targetCell = 1L, tau = 0.999999,
+        Slicing.Content(dims = 2, shardPlanes = 2))
+      .drop("family")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(4),
         r.getLong(5)))
     for (i <- 0 until 12)
@@ -296,9 +309,10 @@ class SemDedupSpec extends SparkSpec {
     val df = (0 until 24).map { i =>
       (i.toLong, Seq(math.cos(i * 0.26), math.sin(i * 0.26), 0.02 * (i % 5)))
     }.toDF("vec_id", "embedding")
-    def run(tables: Int) = Similarity.semDedupHierShardedByContent(
-        df, "embedding", "vec_id", dims = 3, targetCell = 2L, tau = 0.97,
-        shardPlanes = 2, tables = tables)
+    def run(tables: Int) = Similarity.semDedupSliced(
+        df, "embedding", "vec_id", targetCell = 2L, tau = 0.97,
+        Slicing.Content(dims = 3, shardPlanes = 2, tables = tables))
+      .drop("family")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
     val t1 = run(1)
@@ -316,9 +330,10 @@ class SemDedupSpec extends SparkSpec {
     val df = (0 until 16).map { i =>
       (i.toLong, Seq(math.cos(i * 0.39), math.sin(i * 0.39)))
     }.toDF("vec_id", "embedding")
-    val out = Similarity.semDedupHierShardedByContent(df, "embedding",
-        "vec_id", dims = 2, targetCell = 2L, tau = 0.9, shardPlanes = 2,
-        tables = 2)
+    val out = Similarity.semDedupSliced(df, "embedding",
+        "vec_id", targetCell = 2L, tau = 0.9,
+        Slicing.Content(dims = 2, shardPlanes = 2, tables = 2))
+      .drop("family")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
     val fanned = Similarity.multiTableBuckets(df, "embedding", dims = 2,
@@ -345,11 +360,12 @@ class SemDedupSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
-    val filt = rows(Similarity.semDedupHierSharded(df, "embedding",
-      "vec_id", targetCell = 2L, tau = 0.97, shards = 4))
-    val mat = rows(Similarity.semDedupHierSharded(df, "embedding",
-      "vec_id", targetCell = 2L, tau = 0.97, shards = 4,
-      matPath = Some(p)))
+    val filt = rows(Similarity.semDedupSliced(df, "embedding",
+      "vec_id", targetCell = 2L, tau = 0.97, Slicing.IdHash(4))
+      .drop("family", "tbl"))
+    val mat = rows(Similarity.semDedupSliced(df, "embedding",
+      "vec_id", targetCell = 2L, tau = 0.97, Slicing.IdHash(4),
+      matPath = Some(p)).drop("family", "tbl"))
     assert(mat == filt,
       s"materialized form must be row-identical: ${mat -- filt} vs " +
         s"${filt -- mat}")
@@ -377,9 +393,10 @@ class SemDedupSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val p = java.nio.file.Files.createTempDirectory("semdedup-cmat")
       .toString + "/shards"
-    def rows(mp: Option[String]) = Similarity.semDedupHierShardedByContent(
-        df, "embedding", "vec_id", dims = 3, targetCell = 2L, tau = 0.97,
-        shardPlanes = 2, tables = 2, matPath = mp)
+    def rows(mp: Option[String]) = Similarity.semDedupSliced(
+        df, "embedding", "vec_id", targetCell = 2L, tau = 0.97,
+        Slicing.Content(dims = 3, shardPlanes = 2, tables = 2), matPath = mp)
+      .drop("family")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
     val filt = rows(None)
@@ -410,8 +427,9 @@ class SemDedupSpec extends SparkSpec {
         targetCell = 2L, tau = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSet
-    def run(families: Int) = Similarity.semDedupHierMulti(df, "embedding",
+    def run(families: Int) = Similarity.semDedupSliced(df, "embedding",
         "vec_id", targetCell = 2L, tau = 0.95, families = families)
+      .drop("tbl", "shard")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
     val f1 = run(1)
@@ -439,9 +457,10 @@ class SemDedupSpec extends SparkSpec {
     def tmp(tag: String) = java.nio.file.Files
       .createTempDirectory(s"semdedup-$tag").toString + "/shards"
     def idRows(par: Int, mp: Option[String]) =
-      Similarity.semDedupHierSharded(df, "embedding", "vec_id",
-          targetCell = 2L, tau = 0.97, shards = 4, matPath = mp,
+      Similarity.semDedupSliced(df, "embedding", "vec_id",
+          targetCell = 2L, tau = 0.97, Slicing.IdHash(4), matPath = mp,
           parallelism = par)
+        .drop("family", "tbl")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
     val seqI = idRows(1, None)
@@ -449,9 +468,11 @@ class SemDedupSpec extends SparkSpec {
     assert(parI == seqI,
       s"parallel id-hash chains must replay: ${parI -- seqI} vs ${seqI -- parI}")
     def cRows(par: Int, mp: Option[String]) =
-      Similarity.semDedupHierShardedByContent(df, "embedding", "vec_id",
-          dims = 3, targetCell = 2L, tau = 0.97, shardPlanes = 2,
-          tables = 2, matPath = mp, parallelism = par)
+      Similarity.semDedupSliced(df, "embedding", "vec_id",
+          targetCell = 2L, tau = 0.97,
+          Slicing.Content(dims = 3, shardPlanes = 2, tables = 2),
+          matPath = mp, parallelism = par)
+        .drop("family")
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
     val seqC = cRows(1, None)
@@ -467,20 +488,22 @@ class SemDedupSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val p = java.nio.file.Files.createTempDirectory("semdedup-fam")
       .toString + "/shards"
-    val base = Similarity.semDedupHierShardedByContent(df, "embedding",
-        "vec_id", dims = 3, targetCell = 2L, tau = 0.97, shardPlanes = 2,
-        tables = 2)
+    val base = Similarity.semDedupSliced(df, "embedding",
+        "vec_id", targetCell = 2L, tau = 0.97,
+        Slicing.Content(dims = 3, shardPlanes = 2, tables = 2))
+      .drop("family")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSet
-    val multi = Similarity.semDedupHierShardedByContentMulti(df, "embedding",
-        "vec_id", dims = 3, targetCell = 2L, tau = 0.97, shardPlanes = 2,
-        tables = 2, families = 2, matPath = Some(p), parallelism = 2)
+    val multi = Similarity.semDedupSliced(df, "embedding",
+        "vec_id", targetCell = 2L, tau = 0.97,
+        Slicing.Content(dims = 3, shardPlanes = 2, tables = 2),
+        families = 2, matPath = Some(p), parallelism = 2)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getDouble(7))).toSet
     assert(multi.filter(_._1 == 0).map(t =>
         (t._2, t._3, t._4, t._5, t._6, t._7, t._8)) == base,
-      "family 0 must be semDedupHierShardedByContent exactly")
+      "family 0 must be the one-family content-sharded run exactly")
     val drops0 = multi.filter(_._1 == 0).map(_._6)
     val dropsAll = multi.map(_._6)
     assert(drops0.subsetOf(dropsAll),
@@ -518,16 +541,18 @@ class SemDedupSpec extends SparkSpec {
     val p = java.nio.file.Files.createTempDirectory("semdedup-frommat")
       .toString + "/shards"
     // the in-JVM composed run writes the materialization it reads
-    val full = Similarity.semDedupHierShardedByContentMulti(df, "embedding",
-        "vec_id", dims = 3, targetCell = 2L, tau = 0.97, shardPlanes = 2,
-        tables = 2, families = 2, matPath = Some(p))
+    val full = Similarity.semDedupSliced(df, "embedding",
+        "vec_id", targetCell = 2L, tau = 0.97,
+        Slicing.Content(dims = 3, shardPlanes = 2, tables = 2),
+        families = 2, matPath = Some(p))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getDouble(7))).toSet
     def ranged(lo: Int, hi: Int) =
-      Similarity.semDedupHierShardedByContentFromMat(spark, p, "embedding",
-          "vec_id", targetCell = 2L, tau = 0.97, shardPlanes = 2,
-          tables = 2, families = 2, shardLo = lo, shardHi = hi)
+      Similarity.semDedupSliced(spark.read.parquet(p), "embedding",
+          "vec_id", targetCell = 2L, tau = 0.97,
+          Slicing.Materialized(shardPlanes = 2, tables = 2, lo, hi),
+          families = 2)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getDouble(7))).toSet
@@ -564,8 +589,9 @@ class SemDedupSpec extends SparkSpec {
       poison($"vec_id", $"embedding"))
     val before = spark.sparkContext.getPersistentRDDs.size
     val thrown = intercept[Exception] {
-      Similarity.semDedupHierSharded(poisoned, "embedding", "vec_id",
-        targetCell = 2L, tau = 0.97, shards = 4, parallelism = 2).count()
+      Similarity.semDedupSliced(poisoned, "embedding", "vec_id",
+        targetCell = 2L, tau = 0.97, Slicing.IdHash(4),
+        parallelism = 2).count()
     }
     assert(thrown != null, "the slice failure must rethrow to the caller")
     // completed slices' pins release explicitly on abort; the FAILED
@@ -578,6 +604,48 @@ class SemDedupSpec extends SparkSpec {
       s"aborted fan-out must not leak pinned storage: " +
         s"${spark.sparkContext.getPersistentRDDs.size} vs $before")
     // the session is still healthy after the job-group cancellation
+    assert(clean.count() == 40L)
+
+    // the same contract on a bare two-thunk fan-out: one thunk fails
+    // while the other's job is running, and that job is cancelled
+    // (its tasks interrupted), not waited out
+    import org.apache.spark.scheduler.{JobResult, JobSucceeded,
+      SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val slowStarted = new java.util.concurrent.CountDownLatch(1)
+    val slowJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val slowEnds = new java.util.concurrent.ConcurrentLinkedQueue[JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.slow") != null)) {
+          slowJobs.add(e.jobId); slowStarted.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (slowJobs.contains(e.jobId)) slowEnds.add(e.jobResult)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val pairThrown = intercept[IllegalStateException] {
+        Overlap.fanOut(Seq(
+          () => {
+            spark.sparkContext.setLocalProperty("graft.test.slow", "1")
+            spark.sparkContext.parallelize(1 to 2, 2)
+              .map { x => Thread.sleep(120000); x }.count()
+          },
+          () => {
+            assert(slowStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+            throw new IllegalStateException("failing thunk")
+          }), parallelism = 2)
+      }
+      assert(pairThrown.getMessage == "failing thunk",
+        "the failing thunk's error must rethrow to the caller")
+      val end = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (slowEnds.isEmpty && System.nanoTime() < end) Thread.sleep(100)
+      assert(slowEnds.size == 1 && slowEnds.peek() != JobSucceeded,
+        s"the surviving thunk's job must be cancelled: ${slowEnds.asScala}")
+      assert(System.nanoTime() - t0 < 60L * 1000 * 1000 * 1000,
+        "the abort must not wait out the surviving thunk's 120 s tasks")
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(clean.count() == 40L)
   }
 }
